@@ -9,10 +9,12 @@ import graft.Tables
 
 /** Structured Streaming ingest (SURVEY.md §2.10, S2→S3→S4): stream →
   * stateless parse/normalize → append-mode memory sink → interactive
-  * queries against the materialized table. Mirrors the reference's split
-  * (prediction/preprocessing/spark.py:279-297): the stream itself is
-  * stateless; all aggregation happens on the materialized table at query
-  * time, so late data simply appears on the next query.
+  * queries against a block-manager snapshot of the drained sink. Mirrors
+  * the reference's split (prediction/preprocessing/spark.py:279-297): the
+  * stream itself is stateless; all aggregation happens on the served table
+  * at query time. [[materializeEvents]] returns a snapshot of a DRAINED
+  * stream, so late data appears on the next materialize call; the
+  * files-backed [[materializeEventsFiles]] is the incremental path.
   *
   * The test/verify path streams the driver's events parquet with an
   * AvailableNow trigger — the same code shape as the Kafka path
@@ -43,6 +45,20 @@ object Ingest {
     else
       spark.readStream.schema(schema)
         .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** Recursive local delete for staging/store scratch under target/ —
+    * the ONE copy of the helper every staged-replay call site used to
+    * inline (review r18). Local-FS only by design: scratch lives under
+    * target/; the sketch STORE listing, which must work on HDFS/S3,
+    * walks via the Hadoop FS API instead
+    * ([[StreamOps.sketchStoreRead]]). */
+  def deleteRecursively(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    rm(new java.io.File(path))
   }
 
   /** Stage each DataFrame as ONE parquet file under `dir` with strictly
@@ -77,20 +93,6 @@ object Ingest {
     * before subtracting the delay) and a session/window emits iff
     * end_us <= wm_us (inclusive at exact equality). Oracles that replay
     * a staged stream must use exactly this arithmetic. */
-  /** Recursive local delete for staging/store scratch under target/ —
-    * the ONE copy of the helper every staged-replay call site used to
-    * inline (review r18). Local-FS only by design: scratch lives under
-    * target/; the sketch STORE listing, which must work on HDFS/S3,
-    * walks via the Hadoop FS API instead
-    * ([[StreamOps.sketchStoreRead]]). */
-  def deleteRecursively(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
-
   def stageOrderedFiles(spark: SparkSession, stages: Seq[DataFrame],
                         dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -183,9 +185,21 @@ object Ingest {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Stream `dir`/events.parquet into a fresh named in-memory table and
-    * block until the AvailableNow trigger drains. Returns the normalized
-    * (µs-timestamp) view of the materialized table. */
+  /** Stream `dir`/events.parquet into a fresh in-memory sink, block until
+    * the AvailableNow trigger drains, and return the normalized
+    * (µs-timestamp) events as a snapshot of the drained sink: an eager
+    * local checkpoint, kept in the block manager. Late rows appear on the
+    * next materialize call.
+    *
+    * Why a snapshot and not the sink's table: Spark plans every scan of a
+    * memory sink as a `LocalTableScanExec` over ALL its rows, re-encoded
+    * on the driver while each query plans and shipped inside its tasks,
+    * so every served call paid for the whole table before reading a row.
+    * The checkpoint leaf is planned as an RDD scan of blocks already in
+    * the block manager, and it keeps the sink scan's slices, so `avg(double)`
+    * sums in the same order. Dropping the sink's temp view afterwards lets
+    * its driver-side rows be collected; `persist()` instead would keep
+    * them reachable through the cached plan. */
   def materializeEvents(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_events_stream_${counter.incrementAndGet()}"
     val query = streamParquet(spark, dir, "events")
@@ -196,7 +210,8 @@ object Ingest {
       .trigger(Trigger.AvailableNow())
       .start()
     query.awaitTermination()
-    Tables.normalizeEventTs(spark.table(name))
+    try Tables.normalizeEventTs(spark.table(name)).localCheckpoint()
+    finally spark.catalog.dropTempView(name): Unit
   }
 
   /** FILES-BACKED twin of [[materializeEvents]] — the serve-path table
@@ -213,9 +228,9 @@ object Ingest {
     * without re-appending drained input (file-source offsets are the
     * checkpointed state), and a fresh session re-serves by just
     * re-registering the view over `outDir`. Late data appears on the
-    * next micro-batch exactly as on the memory path (the stream is
-    * stateless; aggregation happens at query time — the reference's
-    * recompute-on-read semantics, unchanged). `StreamingSpec` pins
+    * next micro-batch (the stream is stateless; aggregation happens at
+    * query time — the reference's recompute-on-read semantics,
+    * unchanged). `StreamingSpec` pins
     * memory/files result equality and the no-duplication resume. */
   def materializeEventsFiles(spark: SparkSession, dir: String,
                              outDir: String,

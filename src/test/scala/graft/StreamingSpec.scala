@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +11,10 @@ import graft.ops.Rollup
 case class Obs(location: String, event_timestamp: java.sql.Timestamp,
                event_id: Long, code: String, value: Double)
 
-class StreamingSpec extends AnyFunSuite with SparkFixture {
+class StreamingSpec extends AnyFunSuite with SparkFixture
+    with AdaptiveSparkPlanHelper {
+
+  private val dir = "/root/testdata/sf0.001"
 
   private def ts(minute: Int) =
     java.sql.Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
@@ -57,7 +62,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("files-backed serve sink equals the memory path, survives a restart, and a checkpointed resume never re-appends") {
-    val dir = "/root/testdata/sf0.001"
     val outDir = "target/test_events_files_sink"
     val ckpt = "target/test_events_files_ckpt"
     Seq(outDir, ckpt).foreach(graft.streaming.Ingest.deleteRecursively)
@@ -83,6 +87,29 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val again = graft.streaming.Ingest.materializeEventsFiles(
       spark, dir, outDir, ckpt)
     assert(again.count() === n, "resume re-appended drained input")
+  }
+
+  test("materializeEvents returns the drained rows and leaves no stream view behind") {
+    val first = graft.streaming.Ingest.materializeEvents(spark, dir)
+    val second = graft.streaming.Ingest.materializeEvents(spark, dir)
+    assert(spark.catalog.listTables().collect().map(_.name).toSeq
+      .filter(_.startsWith("graft_events_stream_")) === Nil)
+    // the AvailableNow stream drains the whole file, so the snapshot holds
+    // exactly the batch table's rows, duplicates included, in any order
+    val batch = Tables.events(spark, dir)
+    for (snap <- Seq(first, second)) {
+      assert(snap.schema === batch.schema)
+      assert(snap.exceptAll(batch).isEmpty && batch.exceptAll(snap).isEmpty)
+    }
+  }
+
+  test("a query over materializeEvents plans no LocalTableScanExec") {
+    val snap = graft.streaming.Ingest.materializeEvents(spark, dir)
+    val roll = Rollup.hourly(graft.ingest.Parse.eventsAsObservations(snap),
+      avgCols = Seq("value"))
+    assert(roll.collect().nonEmpty)
+    val plan = roll.queryExecution.executedPlan
+    assert(find(plan)(_.isInstanceOf[LocalTableScanExec]).isEmpty, plan.toString)
   }
 
   test("streaming dropDuplicatesWithinWatermark removes replayed events") {
