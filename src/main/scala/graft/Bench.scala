@@ -4,63 +4,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed-Aggregator groups (BoundedTopK*/BoundedCollect/ModalAgg) keep
-      // BOUNDED buffers, so the ObjectHashAggregate 128-distinct-key sort
-      // fallback only re-introduces the corpus-wide sort the aggregators
-      // exist to avoid (measured: brute hardNegatives 44.4 s -> 13.8 s at
-      // 100x when the map stays hash). 64k keys x k-pair buffers is MBs.
-      // BLAST RADIUS (session-wide, ADVICE r16): this raises the
-      // ObjectHashAggregate sort-fallback for EVERY typed aggregate in the
-      // session, not just the bounded BoundedTopK*/ModalAgg buffers it
-      // exists for. A future aggregator with UNBOUNDED per-group state
-      // (collect_list/percentile-style) over >64k groups per partition
-      // would lose the 128-key memory safety valve — keep new typed
-      // aggregates k-bounded, or scope this per-query via withSQLConf.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // Cached-plan compilation honors AQE (r20): by default
-      // canChangeCachedPlanOutputPartitioning=false compiles every
-      // persisted relation WITHOUT adaptive coalescing, so caches fill at
-      // the raw shuffle width (32 one-row-ish partitions at sf0.1) and
-      // every downstream cache scan pays 32 micro-tasks; with it on, the
-      // cache keeps AQE's size-derived partitioning — the same adaptivity
-      // the rest of the plan already gets, at any scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Serialized shuffle writer everywhere (r20, guide §2.1/§1): with
-      // shuffle partitions at the core count, every exchange's map tasks
-      // take the BypassMergeSortShuffleWriter (engaged when reducers <=
-      // spark.shuffle.sort.bypassMergeThreshold, default 200), which opens
-      // one spill file PER REDUCER per map task and then concatenates them
-      // — 32x32 = 1024 file creates + NIO copies per exchange, profiled as
-      // the dominant per-task fixed cost of every 32-task micro-stage
-      // (thread dumps: DiskBlockObjectWriter.open + copyFileStreamNIO;
-      // measured 3-4x the stage CPU of the serialized path). Threshold 1
-      // routes every shuffle through the UnsafeShuffleWriter - ONE output
-      // file per map task - which is exactly the writer any production
-      // reducer count (> 200) takes anyway: this aligns local execution
-      // with the at-scale write path rather than tuning for local[32].
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Codegen cache sized to the registry (r20, guide §1/§2.4): the
-      // default spark.sql.codegen.cache.maxEntries=100 LRU cannot hold
-      // even one iterative query's generated sources (an AQE plan compiles
-      // a unit per stage; the CC/kmeans/BPE loops re-enter theirs every
-      // round), so the cache THRASHES mid-query and every miss re-runs
-      // janino IN THE EXECUTOR THREAD - profiled via stack sampling: the
-      // compiler's type probes each walk ParentClassLoader into an RPC
-      // class-fetch attempt + ClassNotFoundException fill, the dominant
-      // RUNNABLE frames of the loop stages. 10k entries holds the whole
-      // 221-query registry's distinct sources (a few thousand, tens of KB
-      // each - bounded well under the bench heap), so the untimed warmup
-      // pass actually pre-compiles the measured run, as intended. Driver-
-      // scoped and data-volume-independent: valid at any scale.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpusFromEnv
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // sorted: deterministic execution order makes per-query timings
     // comparable across runs (Map order varies per JVM).
@@ -68,9 +13,10 @@ object Bench {
     // (the driver sets no filter and measures everything).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def hygiene(): Int = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val dropped = BlockHygiene.destroyBroadcasts(spark.sparkContext)
+      val dropped = BlockHygiene.reset(spark)
+      // timing step: a full GC lets ContextCleaner's reference queue drain
+      // weakref-tracked state (shuffle files, leftover handles) now, in the
+      // untimed gap, rather than mid-way through a later timed query
       System.gc()
       dropped
     }
@@ -203,20 +149,11 @@ object Bench {
       val jvmGc = (BenchMetrics.jvmGcMillis() - gc0) / 1e3
       BlockHygiene.drainListenerBus(spark.sparkContext)
       val (jobs, stages, tasks, runMs, gcMs, schedMs) = metrics.snapshot()
-      // Hygiene between queries — three channels, all inside the untimed gap:
-      // 1. cached relations + persisted/localCheckpointed RDD blocks (Dedup
-      //    signatures, the CC loop's checkpoints): clearCache + BLOCKING
-      //    RDD-level unpersist, or eviction runs concurrently with — and
-      //    pollutes — the next timed query.
-      // 2. broadcast blocks: cleared by NEITHER of the above — ContextCleaner
-      //    only reaps them after driver GC of the Broadcast handle, so across
-      //    68 queries (each auto-broadcasting small join sides) MemoryStore
-      //    pressure accumulates until a memory-hungry query spills
-      //    (BENCH_r06: t_hashed_tf_neardup 39.2 s vs 7.7-8.0 s isolated).
-      //    BlockHygiene.destroyBroadcasts removes them synchronously.
-      // 3. everything weakref-tracked (shuffle state, leftover handles):
-      //    System.gc() lets ContextCleaner's reference queue drain now rather
-      //    than mid-way through a later timed query.
+      // Hygiene between queries, inside the untimed gap: BlockHygiene.reset
+      // (caches, persisted RDDs, broadcasts) plus the GC step. Broadcasts
+      // matter most: across 68 queries (each auto-broadcasting small join
+      // sides) MemoryStore pressure accumulated until a memory-hungry query
+      // spilled (BENCH_r06: t_hashed_tf_neardup 39.2 s vs 7.7-8.0 s isolated).
       val dropped = hygiene()
       val storageUsed = BlockHygiene.storageMemoryUsed(spark.sparkContext)
       System.err.println(
@@ -268,7 +205,7 @@ object Bench {
         val envCpus = raw""""cpus"\s*:\s*(\d+)""".r
           .findFirstMatchIn(txt).map(_.group(1))
         val runSf = new java.io.File(sfDir).getName
-        if (!envSf.contains(runSf) || !envCpus.contains(cpus)) {
+        if (!envSf.contains(runSf) || !envCpus.contains(cpus.toString)) {
           System.err.println(s"[bench-rerun] envelope $envelopePath is for " +
             s"sf=${envSf.getOrElse("?")}/cpus=${envCpus.getOrElse("?")}, " +
             s"this run is sf=$runSf/cpus=$cpus — envelope ignored")

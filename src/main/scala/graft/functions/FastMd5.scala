@@ -22,7 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `MessageDigest` per thread and hex-encodes the 16 digest bytes straight
   * into the `UTF8String`'s backing array: measured 382 → 150 ns/call on
   * 3-byte inputs and 468 → 246 ns/call on 40-byte inputs
-  * (`Md5MicroBench`), with 2 allocations per call instead of ~6.
+  * (OPTIMIZATION_r20.md, batch 6), with 2 allocations per call instead
+  * of ~6.
   *
   * Semantics: EXACTLY Spark's `md5` — input BinaryType (Catalyst inserts
   * the same implicit string→binary cast at string call sites), output the

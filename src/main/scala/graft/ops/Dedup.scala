@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.Session
 import graft.functions.FastMd5.fastMd5
 
 /** Document deduplication for a training-data pipeline: exact (hash groupBy),
@@ -861,7 +862,8 @@ object Dedup {
     * labels, and its label's label; converges in O(log diameter) rounds.
     * Near-dup clusters are dense and shallow (diameter ≲ 5 even for chained
     * paraphrases), so the loop is short; the `maxIters` bound caps
-    * pathological chains.
+    * pathological chains, and reaching it without an observed fixpoint
+    * throws `IllegalStateException` rather than return unconverged labels.
     *
     * Round-11 shape — JOB economy, not just shuffle economy. Under AQE
     * every exchange materializes as its own scheduled job, and an iterative
@@ -937,14 +939,11 @@ object Dedup {
     // exchanges. At 100 TB the same logic holds: the loop's relations are
     // O(|pairs|), not corpus-sized, and their partitioning should track the
     // measured pair volume, not the session-wide corpus setting. Confs are
-    // restored in the finally; the returned labels are a checkpoint leaf,
-    // so downstream consumers re-plan under the session's own regime.
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
+    // restored by Session.withConfs; the returned labels are a checkpoint
+    // leaf, so downstream consumers re-plan under the session's own regime.
     val loopParts = math.max(p.rdd.getNumPartitions, 2)
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    Session.withConfs(sess, Session.aqeOff,
+        Session.shufflePartitions(loopParts)) {
     val edges = p
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(p.select(col("doc_b").as("u"), col("doc_a").as("v")))
@@ -1010,9 +1009,13 @@ object Dedup {
     // repartition boundary between steps does not help: the step output
     // already carries that exact partitioning, so the optimizer collapses
     // the no-op exchange and the re-execution stays.
+    //
+    // The cap is loud: labels short of the fixpoint are wrong components,
+    // so reaching `maxIters` without an observed fixpoint throws.
     val fused = 2
     var iter = 0
     var converged = false
+    var sums = Seq.empty[BigDecimal]
     while (!converged && iter < maxIters) {
       val obs = (1 to fused).map(k =>
         org.apache.spark.sql.Observation(s"cc-$iter-$k-${System.nanoTime()}"))
@@ -1022,19 +1025,16 @@ object Dedup {
           .observe(obs(k), sum(col("component").cast("decimal(38,0)")).as("s"))
       }
       val next = Checkpoints.materialized(stepped)
-      val sums = obs.map(o => BigDecimal(o.get.apply("s").toString))
+      sums = obs.map(o => BigDecimal(o.get.apply("s").toString))
       converged = sums.sliding(2).exists(w => w.head == w.last)
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-debug] round $iter sums=${sums.mkString(",")} " +
-          s"converged=$converged" +
-          s" cumJobs=${sess.sparkContext.statusTracker.getJobIdsForGroup(null).length}")
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint after $iter rounds of $fused " +
+          s"steps (maxIters = $maxIters); last step sums ${sums.mkString(", ")}")
     labels
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -1444,20 +1444,18 @@ object Dedup {
     * time only ×1.16: pure job-gap). AQE has nothing to offer here —
     * both aggregates collapse to a handful of rows, and the join picks
     * the same shuffled plan either way (the component side's stats are
-    * reset by the loop's checkpoints). Session confs are restored in the
-    * finally; the histogram itself is a few-dozen-row leaf, so the eager
+    * reset by the loop's checkpoints). Session confs are restored on
+    * exit; the histogram itself is a few-dozen-row leaf, so the eager
     * materialization is free and downstream consumers replay no work. */
   def clusterSizeHistogram(docs: DataFrame, components: DataFrame): DataFrame = {
-    val sess = docs.sparkSession
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try Checkpoints.materialized(
-      canonicalizeFrom(docs, components)
-        .groupBy(col("canonical_id")).agg(count(lit(1)).as("cluster_size"))
-        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs")))
-    finally sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    Session.withConfs(docs.sparkSession, Session.aqeOff) {
+      Checkpoints.materialized(
+        canonicalizeFrom(docs, components)
+          .groupBy(col("canonical_id")).agg(count(lit(1)).as("cluster_size"))
+          .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
+          .select(col("cluster_size"), col("n_clusters"),
+            (col("cluster_size") * col("n_clusters")).as("n_docs")))
+    }
   }
 
   /** Keep-POLICY selection over near-dup clusters: where
@@ -1576,11 +1574,8 @@ object Dedup {
     // would run 32 micro-tasks per node-sized aggregate.
     val edgeRows = e.count()
     val loopParts = math.max((edgeRows / 1000000L).toInt + 1, 2)
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    Session.withConfs(sess, Session.aqeOff,
+        Session.shufflePartitions(loopParts)) {
       for (_ <- 1 to iters) {
         val contrib = ranks
           .join(deg, ranks("doc_id") === deg("u"))
@@ -1591,9 +1586,6 @@ object Dedup {
             .agg(sum(col("c")).as("s"))
             .select(col("v").as("doc_id"), newRank.as("rank_ppm")))
       }
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     ranks
   }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Embedding similarity: quantized cosine, brute-force top-k (the exactness
   * baseline), random-hyperplane LSH bucketing (the scale path), and
   * embedding-cosine near-dup pairs.
@@ -394,17 +396,10 @@ object EmbeddingSim {
     // would run 32 micro-tasks per K-row aggregate
     val corpusRows = corpus.count()
     val loopParts = math.max((corpusRows / 200000L).toInt + 1, 2)
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val out =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-        Checkpoints.materialized(cents)
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+    val out = Session.withConfs(sess, Session.aqeOff,
+        Session.shufflePartitions(loopParts)) {
+      Checkpoints.materialized(cents)
+    }
     corpus.unpersist()
     out
   }
@@ -753,17 +748,10 @@ object EmbeddingSim {
     val sess = vectors.sparkSession
     val svRows = sv.count()
     val loopParts = math.max((svRows / 800000L).toInt + 1, 2)
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val out =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-        Checkpoints.materialized(cents)
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+    val out = Session.withConfs(sess, Session.aqeOff,
+        Session.shufflePartitions(loopParts)) {
+      Checkpoints.materialized(cents)
+    }
     sv.unpersist()
     out
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ingest.Parse
 import graft.ops.{AsofJoin, EmbeddingSim, EventAnalytics, Forecast, IntervalJoin, Latest, Multimodal, Rollup, Sequences, Sketches}
 import graft.streaming.Ingest
@@ -563,8 +563,8 @@ object Pipeline {
           .select(col("user_id"), col("ts"), col("event_id"), col("value"))
           .as[graft.streaming.StreamOps.ScdEvent]
         val name = "graft_stream_scd2"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"$dir/events.parquet"))) {
           val q = graft.streaming.StreamOps.scd2Stream(typed).toDF()
             .writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -619,8 +619,8 @@ object Pipeline {
           .select(col("user_id"), col("event_type"), col("ts"))
           .as[graft.streaming.StreamOps.FunnelEvent]
         val name = "graft_stream_funnel"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"$dir/events.parquet"))) {
           val q = graft.streaming.StreamOps.funnelStream(typed, steps).toDF()
             .writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -662,8 +662,8 @@ object Pipeline {
           .select(col("user_id"), col("event_type"), col("ts"))
           .as[graft.streaming.StreamOps.FunnelEvent]
         val name = "graft_stream_retention"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"$dir/events.parquet"))) {
           val q = graft.streaming.StreamOps.retentionStream(typed, bucketDays = 7)
             .toDF()
             .writeStream.format("memory").queryName(name)
@@ -738,8 +738,8 @@ object Pipeline {
             col("e_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
             col("e_ts") < col("p_ts"))
         val name = "graft_stream_interval_join"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"$dir/events.parquet"))) {
           val q = joined
             .writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -786,8 +786,8 @@ object Pipeline {
             col("event_type").as("code"), col("value"))
           .as[graft.streaming.StreamOps.ObsState]
         val name = "graft_stream_latest"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"$dir/events.parquet")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"$dir/events.parquet"))) {
           val q = graft.streaming.StreamOps.latestPerKeyStateful(typed).toDF()
             .writeStream.format("memory").queryName(name)
             .outputMode(graft.streaming.StreamOps.LatestOutputMode)
@@ -857,8 +857,8 @@ object Pipeline {
         val in = Ingest.stageOrderedFiles(s, Seq(canonical, replays),
           s"target/stream_dedup_watermark_in_$tag")
         val name = s"graft_stream_dedup_wm_$tag"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"target/stream_dedup_watermark_in_$tag")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"target/stream_dedup_watermark_in_$tag"))) {
           val q = graft.streaming.StreamOps.dedupExactStream(in, "30 days")
             .writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -928,8 +928,8 @@ object Pipeline {
         val in = Ingest.stageOrderedFiles(s, Seq(ev, wmDriver),
           s"target/stream_sessionize_in_$tag")
         val name = s"graft_stream_sessionize_$tag"
-        Ingest.withStateParallelism(s,
-            Ingest.statePartitions(s, s"target/stream_sessionize_in_$tag")) {
+        Session.withConfs(s, Session.shufflePartitions(
+            Ingest.statePartitions(s, s"target/stream_sessionize_in_$tag"))) {
           val q = graft.streaming.StreamOps.sessionizeStream(in,
               gapMinutes = 480, watermarkDelay = "4 hours")
             .writeStream.format("memory").queryName(name)

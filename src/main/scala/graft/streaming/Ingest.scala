@@ -158,7 +158,13 @@ object Ingest {
     * partitioning should track key/data volume, not driver cores — and
     * the session conf stays the CAP so a genuinely large input still
     * fans out to the session's full width. Floor 2 (the loop-regime
-    * floor: never serialize a stateful pipeline to one partition). */
+    * floor: never serialize a stateful pipeline to one partition).
+    *
+    * Callers scope the count with `Session.withConfs(spark,
+    * Session.shufflePartitions(n))` around the build, start and drain of
+    * ONE bounded stream. The stream's cloned session snapshots the conf at
+    * `start()`; the query must DRAIN inside the block (awaitTermination)
+    * so the restore cannot race a running batch. */
   def statePartitions(spark: SparkSession, paths: String*): Int = {
     def bytes(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
@@ -170,19 +176,6 @@ object Ingest {
     val cap = graft.ops.Checkpoints.shufflePartitions(spark)
     math.min(cap,
       math.max(2, math.ceil(total.toDouble / math.max(1L, advisory)).toInt))
-  }
-
-  /** Run `body` (build + start + drain ONE bounded streaming query) with
-    * `spark.sql.shuffle.partitions` scoped to `n` — the non-adaptive
-    * loop-regime convention ([[graft.ops.Dedup.connectedComponents]])
-    * applied to streaming state. The stream's cloned session snapshots
-    * the conf at `start()`; the query must DRAIN inside `body`
-    * (awaitTermination) so the restore cannot race a running batch, and
-    * the session conf is restored for every plan after it. */
-  def withStateParallelism[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Stream `dir`/events.parquet into a fresh in-memory sink, block until

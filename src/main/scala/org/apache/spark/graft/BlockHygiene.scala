@@ -19,9 +19,26 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.BroadcastBlockId
 
 object BlockHygiene {
+
+  /** The between-query reset every main runs, so a query starts from a
+    * clean MemoryStore and cannot reuse (or be slowed by) an earlier
+    * query's materializations:
+    *  1. cached relations: `clearCache`;
+    *  2. persisted/localCheckpointed RDD blocks (Dedup signatures, the CC
+    *     loop's checkpoints): a BLOCKING unpersist, or eviction runs
+    *     concurrently with — and pollutes — the next query;
+    *  3. broadcast blocks, which neither of the above touches:
+    *     [[destroyBroadcasts]].
+    * Returns the number of broadcasts destroyed. */
+  def reset(spark: SparkSession): Int = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    destroyBroadcasts(spark.sparkContext)
+  }
 
   /** Distinct ids of all broadcast variables that still hold blocks anywhere
     * in the block manager (driver or executors). */
@@ -36,7 +53,7 @@ object BlockHygiene {
     * ever re-read after its gap. Returns the number of broadcasts removed.
     *
     * Best-effort per id: the ids are a SNAPSHOT, and the ContextCleaner
-    * (woken by the System.gc() in the same hygiene gap) can reap a
+    * (woken by a System.gc() in the same hygiene gap) can reap a
     * broadcast between the snapshot and the blocking remove — the remove
     * then surfaces "Block broadcast_N does not exist" from an executor
     * endpoint, which is exactly the end state this method wants. Swallow

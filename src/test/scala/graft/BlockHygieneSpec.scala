@@ -38,4 +38,21 @@ class BlockHygieneSpec extends AnyFunSuite with SparkFixture {
     assert(BlockHygiene.broadcastIds(sc).isEmpty,
       "destroyBroadcasts must leave zero broadcast blocks")
   }
+
+  test("reset drops cached relations, persisted RDDs and broadcasts in one call") {
+    val sc = spark.sparkContext
+    val cached = spark.range(1000).withColumn("k", col("id") % 10).cache()
+    cached.count()
+    val rdd = sc.parallelize(1 to 100).persist()
+    rdd.count()
+    val small = (0L until 10L).map(k => (k, s"v$k")).toDF("k", "v")
+    cached.join(broadcast(small), "k").write.format("noop").mode("overwrite").save()
+    BlockHygiene.drainListenerBus(sc)
+    assert(BlockHygiene.broadcastIds(sc).nonEmpty)
+
+    assert(BlockHygiene.reset(spark) > 0)
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(cached.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    assert(BlockHygiene.broadcastIds(sc).isEmpty)
+  }
 }

@@ -324,6 +324,20 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("connectedComponents fails loudly at maxIters instead of returning unconverged labels") {
+    // a 16-node path: one round (two fused pointer-jumping steps) leaves
+    // node 16 at label 12, so the cap is reached before any fixpoint
+    val path = (1L until 16L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val scoped = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def regime = scoped.map(k => spark.conf.getAll.contains(k) -> spark.conf.getOption(k))
+    val before = regime
+    val e = intercept[IllegalStateException](Dedup.connectedComponents(path, maxIters = 1))
+    assert(e.getMessage.contains("after 1 rounds") && e.getMessage.contains("sums"))
+    assert(regime === before, "the loop regime must be restored on the failure path too")
+    val comp = Dedup.connectedComponents(path).collect().map(_.getLong(1)).toSet
+    assert(comp === Set(1L))
+  }
+
   test("winnowing guarantee: every shared run of w+k-1 tokens yields a shared print") {
     // 10 doc pairs, each sharing a run of EXACTLY w+k−1 = 7 tokens unique
     // to the pair, embedded in unrelated filler — the guarantee promises
